@@ -6,9 +6,9 @@ docs, plus per-operator timings over the $SPARK_GRAFT_SF_DIR parquet.
 
 Env:
   SPARK_GRAFT_SF_DIR   default /root/testdata/sf0.1
-  SPARK_GRAFT_CPUS     default 32 (local[N] — the sandbox proxy for N
-                       executors; run at 8 and 32 for the scaling
-                       criterion, see BENCH/BASELINE.md)
+  SPARK_GRAFT_CPUS     default: the host's cores (local[N] — the sandbox
+                       proxy for N executors; run at 8 and 32 for the
+                       scaling criterion, see BENCH/BASELINE.md)
   SPARK_GRAFT_BENCH_DOCS  default 2_000_000 synthetic docs
 
 Each query is forced end-to-end with a hash-reduce sink (sum of
@@ -17,6 +17,7 @@ way a bare count() would.
 """
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -37,16 +38,16 @@ def force(df: DataFrame) -> int:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "2000000"))
     os.environ.setdefault("SPARK_LOCAL_IP", "127.0.0.1")
 
     from gdal_spark import queries as Q
     from gdal_spark.operators import tiling
     from gdal_spark.operators.spatial_join import spatial_join_points_in_polygons
-    from gdal_spark.session import get_spark
+    from gdal_spark.session import conf_override, get_spark, host_cpus
     from gdal_spark.sources import docs, polygons
 
+    cpus = host_cpus()
     spark = get_spark("bench", master=f"local[{cpus}]")
 
     timings: dict[str, float] = {}
@@ -85,14 +86,9 @@ def main() -> None:
         # 10^12-row scale the per-job setup amortizes to zero — timing
         # it per-rep would just measure setup/compute ratio at the
         # bench's (much smaller) corpus size
-        # r3-late: the exact stage runs as the pure-JVM HOF crossing
-        # fold (strategy='jvm') — measured ~30% faster than the Arrow
-        # broadcast-dict path on the 64-vertex cover with identical
-        # output; the Arrow twin is timed separately below so the
-        # cross-round series stays comparable
         d = spark.read.parquet(doc_path)
         joined = spatial_join_points_in_polygons(
-            d, cov, res=6, strategy="jvm",
+            d, cov, res=6,
             keep_point_cols=["doc_id", "doc_index", "spans", "lon", "lat"],
         )
         tiled = tiling.assign_tiles(joined, zoom=12)
@@ -116,21 +112,6 @@ def main() -> None:
         }
         print(json.dumps(out))
         return
-
-    # Arrow-path twin of the headline (one rep, cross-round comparable)
-    d = spark.read.parquet(doc_path)
-    joined = spatial_join_points_in_polygons(
-        d, cov, res=6, strategy="broadcast",
-        keep_point_cols=["doc_id", "doc_index", "spans", "lon", "lat"],
-    )
-    sel = tiling.assign_tiles(joined, zoom=12).select(
-        "doc_id", "spans", "poly_id", "tx", "ty_xyz", "quadkey")
-    best = float("inf")
-    for _ in range(2):  # best-of-2: single reps were +-10x on this host
-        t0 = time.time()
-        force(sel)
-        best = min(best, time.time() - t0)
-    timings["headline_join_tile_arrow"] = round(best, 3)
 
     # -- Zipfian corpus for the dedup benches (VERDICT r1: the uniform
     # word-soup corpus makes ~56% of pairs genuine candidates, so the
@@ -203,31 +184,29 @@ def main() -> None:
         out = tile_raster.slope_tiles(tiles, tile=128, nty=8, ntx=8)
         return out.select("ty", "tx", F.xxhash64("slope_deg").alias("h"))
 
-    def bench_bigpoly(strategy):
+    def bench_bigpoly(grouped):
         # 4096-vertex rings (VERDICT r2: the 64-vertex cover can't see
-        # ring-transfer amplification). 'broadcast' rides the
-        # broadcast-dict PIP (8 bytes/candidate into Arrow);
-        # 'shuffle' (r4) is the grouped cogroup form — rings ship once
-        # per (cell, poly_id) group, the no-broadcast scale path. The
-        # old rings-in-row cliff ('rowrings', 64 KiB/candidate) is an
-        # opt-in ablation (SPARK_GRAFT_BENCH_ABLATION=1 or
-        # tools/bench_isolated.py) so the suite wall time tracks engine
-        # quality, not the deliberately-bad control (VERDICT r3 item 8).
+        # ring-transfer amplification). The default join takes the
+        # broadcast arm (8 bytes/candidate into Arrow); with the
+        # broadcast threshold at -1 it takes the grouped cogroup arm —
+        # rings ship once per (cell, poly_id) group, the no-broadcast
+        # scale path.
         def run(s, d):
             dense = polygons.countries64_dense_cover(s, res=6, nv=4096)
             # repartition: a bare limit() collapses the no-shuffle
             # broadcast path to one task, which would bench task-count,
             # not ring transfer
             pts = s.read.parquet(doc_path).limit(100_000).repartition(cpus)
-            return spatial_join_points_in_polygons(
-                pts, dense, res=6, strategy=strategy, keep_point_cols=["doc_id"]
-            )
+            with (conf_override(s, "spark.sql.autoBroadcastJoinThreshold", "-1")
+                  if grouped else contextlib.nullcontext()):
+                return spatial_join_points_in_polygons(
+                    pts, dense, res=6, keep_point_cols=["doc_id"])
         return run
 
     per_query = {
         "tile_assign": Q.q_tile_assign,
-        "spatial_join_bigpoly": bench_bigpoly("broadcast"),
-        "spatial_join_bigpoly_grouped": bench_bigpoly("shuffle"),
+        "spatial_join_bigpoly": bench_bigpoly(grouped=False),
+        "spatial_join_bigpoly_grouped": bench_bigpoly(grouped=True),
         "pyramid_counts": Q.q_pyramid_counts,
         "spatial_join": Q.q_spatial_join,
         "spatial_join_wkb": Q.q_spatial_join_wkb,
@@ -264,8 +243,7 @@ def main() -> None:
         "ogr_summary": Q.q_ogr_summary,
     }
     if os.environ.get("SPARK_GRAFT_BENCH_ABLATION"):
-        # deliberately-bad / noisy arms, excluded from the tracked wall
-        per_query["spatial_join_bigpoly_rowrings"] = bench_bigpoly("rowrings")
+        # noisy arm, excluded from the tracked wall
         per_query["viewshed_1k"] = bench_viewshed(1024)
     for name, fn in per_query.items():
         t = time.time()

@@ -13,9 +13,9 @@ The exact rule, reproduced so boundary behavior matches bit-for-bit:
 The envelope pretest (ogrlinearring.cpp:488-497) is inclusive:
 MinX <= x <= MaxX and MinY <= y <= MaxY.
 
-Also implements the layer spatial-filter staging of
-/root/reference/ogr/ogrsf_frmts/generic/ogrlayer.cpp:2253-2325
-(FilterGeometry): bbox reject -> bbox-containment accept -> exact test.
+The layer spatial-filter staging of ogrlayer.cpp:2253-2325
+(FilterGeometry: bbox reject -> exact test) is the JVM envelope
+prefilter in operators.spatial_join followed by this kernel.
 """
 
 from __future__ import annotations
@@ -146,12 +146,3 @@ def point_in_polygon(xs, ys, rings: list[np.ndarray]) -> np.ndarray:
         inside &= ~point_in_ring(xs, ys, hole)
     return inside
 
-
-def filter_points_staged(xs, ys, ring_xy: np.ndarray) -> np.ndarray:
-    """FilterGeometry staging for point features vs a polygon filter
-    (ogrlayer.cpp:2253-2325): bbox reject, then for points the exact
-    containment test (points whose bbox == the point itself: the
-    'envelope contained -> accept' stage collapses into the bbox pass).
-    Semantically equal to point_in_ring with envelope pretest; kept as a
-    named stage so tests can pin the short-circuit order."""
-    return point_in_ring(xs, ys, ring_xy, test_envelope=True)

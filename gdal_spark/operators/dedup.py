@@ -196,12 +196,12 @@ def ngram_jaccard_pairs(
     out = (
         cand.join(
             docsets.select(F.col("_id").alias("id_a"), F.col("gs").alias("gs_a"),
-                           F.col("ng").alias("na")),
+                           F.col("ng").cast("bigint").alias("na")),
             "id_a",
         )
         .join(
             docsets.select(F.col("_id").alias("id_b"), F.col("gs").alias("gs_b"),
-                           F.col("ng").alias("nb")),
+                           F.col("ng").cast("bigint").alias("nb")),
             "id_b",
         )
         .withColumn("shared", F.size(F.array_intersect("gs_a", "gs_b")).cast("bigint"))

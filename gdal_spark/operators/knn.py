@@ -32,6 +32,12 @@ from ..functions import tiles as TF
 ORIGIN_SHIFT = TF.ORIGIN_SHIFT
 
 
+def _d2():
+    """Squared mercator-meter distance between point and query."""
+    return ((F.col("_pmx") - F.col("_qmx")) * (F.col("_pmx") - F.col("_qmx"))
+            + (F.col("_pmy") - F.col("_qmy")) * (F.col("_pmy") - F.col("_qmy")))
+
+
 def _cell_xy(lon, lat, res: int):
     """(cx, cy) integer cell coords (XYZ orientation) at `res`."""
     lim = 2**res - 1
@@ -84,7 +90,17 @@ def knn_join(
     if max_rounds is None:
         max_rounds = lim + 2
 
+    win = Window.partitionBy("_qid").orderBy(F.col("_d2").asc(), F.col("_pid").asc())
     results = None   # accumulated top-k per finished query
+    n_pts = pts.count()
+    if n_pts <= k:
+        # every point is in every query's top k: rank the cross join
+        # (|queries| x |points| rows, no more than the output) instead
+        # of growing the ring until it covers the whole grid
+        results = (
+            pending.crossJoin(pts).select("_qid", "_pid", _d2().alias("_d2"))
+            .withColumn("_rank", F.row_number().over(win))
+        )
     carried = None   # previous rounds' top-k for still-pending queries
     s = 1
     prev_s = 0
@@ -94,7 +110,7 @@ def knn_join(
     _topks: list[DataFrame] = []
     _prev_pending: DataFrame | None = None
     _prev_carried: DataFrame | None = None
-    while rounds < max_rounds:
+    while n_pts > k and rounds < max_rounds:
         rounds += 1
         # ONLY the new annulus: cells with Chebyshev distance in
         # (prev_s, s] of the query cell. Cells <= prev_s were already
@@ -124,13 +140,10 @@ def knn_join(
             (pts["_pcx"] == qcells["_cx"]) & (pts["_pcy"] == qcells["_cy"]),
         ).select(
             "_qid", "_pid",
-            ((F.col("_pmx") - F.col("_qmx")) * (F.col("_pmx") - F.col("_qmx"))
-             + (F.col("_pmy") - F.col("_qmy")) * (F.col("_pmy") - F.col("_qmy"))
-             ).alias("_d2"),
+            _d2().alias("_d2"),
         )
         if carried is not None:
             cand = carried.select("_qid", "_pid", "_d2").unionByName(cand)
-        win = Window.partitionBy("_qid").orderBy(F.col("_d2").asc(), F.col("_pid").asc())
         # persist: topk feeds the done-test, the finished rows AND the
         # final union — without it each round's big candidate join
         # would be recomputed three times (and re-recomputed by the

@@ -1,48 +1,37 @@
-"""Cell-bucketed spatial join (point-in-polygon / intersects).
+"""Cell-bucketed spatial join (point-in-polygon).
 
 Plan shape (the Spark-native re-derivation of the reference's layer
-spatial filter + layer-algebra joins):
+spatial filter, ogrlayer.cpp:2253-2325 FilterGeometry):
 
   points ──cell assignment (codegen column math)──┐
                                                   ├─ equi-join on cell ──
   polygons ──cover explode (cell, poly attrs) ────┘
-      → envelope prefilter  (JVM column compare — the bbox stage of
-        ogrlayer.cpp:2253-2325 FilterGeometry)
-      → exact ray-cast PIP  (Arrow-batched pandas UDF running the
-        crossing rule of ogrlinearring.cpp:503-531)
+      → envelope prefilter  (JVM column compare — the bbox stage)
+      → exact ray-cast PIP  (numpy crossing rule of
+        ogrlinearring.cpp:503-531, per polygon part: outer ring minus
+        holes, OR across parts)
 
-Join strategy:
-- 'broadcast' (default when the cover table is small): the polygon
-  cover is broadcast; NO shuffle of the point side at all — at 10^12
-  rows this is the only acceptable default.
-- 'shuffle': plain equi-join on cell; AQE skew-join splits hot cells.
-- 'salted': point side gets salt = doc_index % n_salt, hot cover cells
-  are replicated n_salt times — explicit skew handling when one cell
-  holds a disproportionate share of points (FIXTURES F3 skew case).
+`spatial_join_points_in_polygons` is the one entry; `spatial_join_wkb`
+decodes WKB points and calls it. The cover's columns say what the
+geometry is: `xs`/`ys` arrays (one ring per polygon) or a `wkb`
+(multi)polygon. The entry picks one of two arms from the measured size
+of that geometry:
 
-Ring transfer: for the broadcast/salted strategies the polygon
-coordinate arrays are NOT join columns — each candidate row carries
-only poly_id through Arrow, and the exact-stage UDF resolves rings
-from a sparkContext.broadcast({poly_id: ring ndarray}) dict that
-crosses to each executor ONCE. With real layers (10^4-10^5 vertices
-per ring) x millions of candidates per cell, rings-as-columns would
-multiply the UDF input volume by orders of magnitude; the broadcast
-dict makes exact-stage transfer 8 bytes/row regardless of polygon
-complexity. When the cover is too big to broadcast at all (10^8
-polygons — exactly the regime where a driver dict is impossible),
-the 'grouped' strategy (= 'shuffle' since r4) ships each ring ONCE
-PER (cell, poly_id) GROUP via a cogrouped applyInPandas: candidates
-shuffle at 24 B + keep-cols per row, rings ride the cogroup's other
-side one copy per group, and the exact stage zips them
-executor-side. The old rings-in-row form ('rowrings') is kept only
-as the measured ablation control (tools/bench_isolated.py):
-64 KiB/candidate at 4096 vertices, 6-30x slower — the cliff the
-grouped form removes.
+- broadcast (whenever it fits): the geometry of each distinct polygon
+  is collected ONCE on the driver and shipped as a
+  sparkContext.broadcast {poly_id: parts}. The geometry-free cover is
+  broadcast-joined, so the point side is never shuffled, and the exact
+  stage is one Arrow UDF that receives (x, y, poly_id) — 24 B per
+  candidate whatever the ring size.
+- grouped (when it does not): candidates cogroup with the geometry on
+  (cell, poly_id), so each polygon ships once per group instead of once
+  per candidate. Skewed keys are left to AQE's skew-join handling.
 
-The 3-stage short-circuit order (bbox reject → envelope accept → exact)
-is preserved: envelope compare happens before the pandas UDF, and the
-UDF re-checks the envelope before ray casting (cheap, keeps parity with
-the reference's staged semantics).
+The decision reads the collect the broadcast arm needs anyway: it stops
+as soon as the geometry bytes pass `spark.sql.autoBroadcastJoinThreshold`
+and then runs the grouped arm; a threshold of -1 always runs it.
+Catalyst's `sizeInBytes` is not used: it estimates countries64_cover
+at res 6 at ~200 MB, against 9.7 KB of distinct rings.
 """
 
 from __future__ import annotations
@@ -54,72 +43,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import tiles as tile_fns
-from ..kernels.pip import point_in_ring
-
-
-@F.pandas_udf(T.BooleanType())
-def _pip_udf(x: pd.Series, y: pd.Series, poly_id: pd.Series,
-             xs: pd.Series, ys: pd.Series) -> pd.Series:
-    """Exact stage, rings-in-row form (shuffle strategy only): group the
-    Arrow batch by polygon, run the vectorized ray-cast once per polygon
-    (numpy broadcast over that group's points)."""
-    out = np.zeros(len(x), dtype=bool)
-    if len(x) == 0:
-        return pd.Series(out)
-    xv = x.to_numpy(dtype=np.float64)
-    yv = y.to_numpy(dtype=np.float64)
-    pid = poly_id.to_numpy()
-    for p in pd.unique(pid):
-        idx = np.nonzero(pid == p)[0]
-        first = idx[0]
-        ring = np.column_stack([
-            np.asarray(xs.iloc[first], dtype=np.float64),
-            np.asarray(ys.iloc[first], dtype=np.float64),
-        ])
-        out[idx] = point_in_ring(xv[idx], yv[idx], ring)
-    return pd.Series(out)
-
-
-def _rings_broadcast(cover: DataFrame):
-    """Collect the polygon layer's rings ONCE on the driver and ship
-    them as a spark broadcast {poly_id: (n, 2) float64 ndarray}.
-
-    This is the dimension side of a broadcast join — collecting it is
-    exactly as legitimate as F.broadcast(cover), and it removes the
-    per-candidate-row ring copy from the Arrow transfer (the scale
-    cliff: ring bytes x candidate rows)."""
-    rows = cover.select("poly_id", "xs", "ys").dropDuplicates(["poly_id"]).collect()
-    rings = {
-        int(r["poly_id"]): np.column_stack([
-            np.asarray(r["xs"], dtype=np.float64),
-            np.asarray(r["ys"], dtype=np.float64),
-        ])
-        for r in rows
-    }
-    return cover.sparkSession.sparkContext.broadcast(rings)
-
-
-def _pip_dict_udf(rings_bc):
-    """Exact stage, broadcast-dict form: the UDF receives only
-    (x, y, poly_id) — 24 bytes/row through Arrow — and resolves ring
-    geometry from the executor-local broadcast (ogrlinearring.cpp
-    crossing rule, identical math to _pip_udf)."""
-
-    @F.pandas_udf(T.BooleanType())
-    def pip(x: pd.Series, y: pd.Series, poly_id: pd.Series) -> pd.Series:
-        rings = rings_bc.value
-        out = np.zeros(len(x), dtype=bool)
-        if len(x) == 0:
-            return pd.Series(out)
-        xv = x.to_numpy(dtype=np.float64)
-        yv = y.to_numpy(dtype=np.float64)
-        pid = poly_id.to_numpy()
-        for p in pd.unique(pid):
-            idx = np.nonzero(pid == p)[0]
-            out[idx] = point_in_ring(xv[idx], yv[idx], rings[int(p)])
-        return pd.Series(out)
-
-    return pip
+from ..kernels import wkb as wkb_mod
+from ..kernels.pip import point_in_polygon
 
 
 def assign_cell(df: DataFrame, lon: str = "lon", lat: str = "lat",
@@ -133,8 +58,6 @@ def assign_cell(df: DataFrame, lon: str = "lon", lat: str = "lat",
 def _decode_point_udf(buf: pd.Series) -> pd.DataFrame:
     """Vectorized WKB point decode (kernels.wkb batch fast path: one
     frombuffer per Arrow batch — no per-row Python on the hot input)."""
-    from ..kernels import wkb as wkb_mod
-
     xs, ys = wkb_mod.decode_points_batch(list(buf))
     return pd.DataFrame({"lon": xs, "lat": ys})
 
@@ -154,55 +77,56 @@ def decode_point_cols(df: DataFrame, geom: str = "geom") -> DataFrame:
     ).drop("_ll")
 
 
-@F.pandas_udf(T.BooleanType())
-def _pip_wkb_udf(x: pd.Series, y: pd.Series, poly_id: pd.Series,
-                 wkb_col: pd.Series) -> pd.Series:
-    """Exact PIP against WKB MultiPolygons, rings-in-row form (shuffle
-    strategy only): decode each distinct polygon ONCE per Arrow batch,
-    then run the vectorized crossing rule per part (outer ring minus
-    holes, OR across parts — OGRPolygon/OGRMultiPolygon containment
-    semantics)."""
-    from ..kernels import wkb as wkb_mod
-    from ..kernels.pip import point_in_polygon
-
-    out = np.zeros(len(x), dtype=bool)
-    if len(x) == 0:
-        return pd.Series(out)
-    xv = x.to_numpy(dtype=np.float64)
-    yv = y.to_numpy(dtype=np.float64)
-    pid = poly_id.to_numpy()
-    for p in pd.unique(pid):
-        idx = np.nonzero(pid == p)[0]
-        polys = wkb_mod.decode_multipolygon(wkb_col.iloc[idx[0]])
-        hit = np.zeros(idx.shape[0], dtype=bool)
-        for rings in polys:
-            hit |= point_in_polygon(xv[idx], yv[idx], rings)
-        out[idx] = hit
-    return pd.Series(out)
+def _parts(values) -> list[list[np.ndarray]]:
+    """One polygon's geometry as parts, each a list of (n, 2) rings
+    (outer first, then holes): a `wkb` (multi)polygon, or one
+    (`xs`, `ys`) ring."""
+    if len(values) == 1:
+        return wkb_mod.decode_multipolygon(bytes(values[0]))
+    xs, ys = values
+    return [[np.column_stack([np.asarray(xs, dtype=np.float64),
+                              np.asarray(ys, dtype=np.float64)])]]
 
 
-def _wkb_polys_broadcast(cover: DataFrame, wkb_col: str = "wkb"):
-    """Decode every distinct polygon's WKB ONCE on the driver and ship
-    the decoded ring sets as a broadcast {poly_id: [rings, ...]} —
-    executors never see WKB bytes or re-decode per batch."""
-    from ..kernels import wkb as wkb_mod
-
-    rows = cover.select("poly_id", wkb_col).dropDuplicates(["poly_id"]).collect()
-    polys = {
-        int(r["poly_id"]): wkb_mod.decode_multipolygon(bytes(r[wkb_col]))
-        for r in rows
-    }
-    return cover.sparkSession.sparkContext.broadcast(polys)
+def _polygon_mask(parts, xv: np.ndarray, yv: np.ndarray) -> np.ndarray:
+    """Exact containment against one polygon's parts (OGRPolygon /
+    OGRMultiPolygon semantics)."""
+    hit = np.zeros(len(xv), dtype=bool)
+    for rings in parts:
+        hit |= point_in_polygon(xv, yv, rings)
+    return hit
 
 
-def _pip_wkb_dict_udf(polys_bc):
-    """Exact WKB-multipolygon PIP, broadcast-dict form: (x, y, poly_id)
-    through Arrow; decoded parts resolved executor-side."""
-    from ..kernels.pip import point_in_polygon
+def _collect_geometry(cover: DataFrame, geom_cols: tuple[str, ...]):
+    """{poly_id: parts} for the broadcast arm, or None when the decoded
+    geometry passes spark.sql.autoBroadcastJoinThreshold (or it is -1).
+
+    Rows stream partition by partition, so a cover too big to broadcast
+    is read only up to the threshold, never collected whole."""
+    conf = cover.sparkSession._jsparkSession.sessionState().conf()
+    limit = conf.autoBroadcastJoinThreshold()
+    if limit < 0:
+        return None
+    rows = (cover.select("poly_id", *geom_cols).dropDuplicates(["poly_id"])
+            .toLocalIterator())
+    geoms, size = {}, 0
+    for r in rows:
+        parts = _parts(r[1:])
+        size += sum(ring.nbytes for rings in parts for ring in rings)
+        if size > limit:
+            return None
+        geoms[int(r[0])] = parts
+    return geoms
+
+
+def _pip_dict_udf(geoms_bc):
+    """Exact stage of the broadcast arm: the UDF receives only
+    (x, y, poly_id) and resolves geometry from the executor-local
+    broadcast, one vectorized mask per polygon in the Arrow batch."""
 
     @F.pandas_udf(T.BooleanType())
     def pip(x: pd.Series, y: pd.Series, poly_id: pd.Series) -> pd.Series:
-        polys_by_id = polys_bc.value
+        geoms = geoms_bc.value
         out = np.zeros(len(x), dtype=bool)
         if len(x) == 0:
             return pd.Series(out)
@@ -211,13 +135,100 @@ def _pip_wkb_dict_udf(polys_bc):
         pid = poly_id.to_numpy()
         for p in pd.unique(pid):
             idx = np.nonzero(pid == p)[0]
-            hit = np.zeros(idx.shape[0], dtype=bool)
-            for rings in polys_by_id[int(p)]:
-                hit |= point_in_polygon(xv[idx], yv[idx], rings)
-            out[idx] = hit
+            out[idx] = _polygon_mask(geoms[int(p)], xv[idx], yv[idx])
         return pd.Series(out)
 
     return pip
+
+
+def _envelope(lon: str, lat: str) -> Column:
+    return ((F.col(lon) >= F.col("minx")) & (F.col(lon) <= F.col("maxx"))
+            & (F.col(lat) >= F.col("miny")) & (F.col(lat) <= F.col("maxy")))
+
+
+def _grouped_pip(pts: DataFrame, cover: DataFrame, *, lon: str, lat: str,
+                 keep: list[str], keep_poly: list[str],
+                 geom_cols: tuple[str, ...]) -> DataFrame:
+    """Grouped arm: cell equi-join against the geometry-free cover ->
+    JVM envelope short-circuit -> cogroup candidates with the geometry
+    table on (cell, poly_id) -> one vectorized mask per group.
+
+    Candidates shuffle at 24 B + keep-cols each; each polygon's geometry
+    ships once per (cell, poly_id) group. Skewed keys are left to AQE."""
+    env_cols = ["cell", "poly_id", "minx", "miny", "maxx", "maxy"]
+    cov_lite = cover.select(*dict.fromkeys(
+        env_cols + [c for c in keep_poly if c not in geom_cols]))
+    carry = list(dict.fromkeys(
+        keep + [lon, lat] + [c for c in keep_poly if c != "poly_id"]))
+    cand = (
+        pts.join(cov_lite, "cell").filter(_envelope(lon, lat))
+        .select(*carry, "cell", "poly_id")
+    )
+    # fresh names on the geometry side: cand's poly_id descends from
+    # the same cover plan, and cogroup rejects the ambiguous attribute
+    geoms = cover.select(
+        F.col("cell").alias("r_cell"), F.col("poly_id").alias("r_poly_id"),
+        *geom_cols,
+    )
+    out_cols = list(dict.fromkeys(keep + keep_poly))
+    cand_schema = {f.name: f for f in cand.schema.fields}
+    missing = [c for c in out_cols if c not in cand_schema]
+    if missing:
+        raise KeyError(
+            f"grouped PIP output columns {missing} not present on the "
+            f"candidate side (available: {sorted(cand_schema)})")
+    out_schema = T.StructType([cand_schema[c] for c in out_cols])
+
+    def exact(key, cand_pdf: pd.DataFrame, geom_pdf: pd.DataFrame) -> pd.DataFrame:
+        if cand_pdf.empty or geom_pdf.empty:
+            return cand_pdf.iloc[0:0].reindex(columns=out_cols)
+        mask = _polygon_mask(
+            _parts(tuple(geom_pdf[c].iloc[0] for c in geom_cols)),
+            cand_pdf[lon].to_numpy(dtype=np.float64),
+            cand_pdf[lat].to_numpy(dtype=np.float64),
+        )
+        return cand_pdf.loc[mask, out_cols]
+
+    return (
+        cand.groupBy("cell", "poly_id")
+        .cogroup(geoms.groupBy("r_cell", "r_poly_id"))
+        .applyInPandas(exact, out_schema)
+    )
+
+
+def spatial_join_points_in_polygons(
+    points: DataFrame,
+    cover: DataFrame,
+    *,
+    res: int = 6,
+    lon: str = "lon",
+    lat: str = "lat",
+    keep_point_cols: list[str] | None = None,
+    keep_poly_cols: list[str] | None = None,
+) -> DataFrame:
+    """points ⋈ polygons with PIP predicate.
+
+    cover: (cell bigint, poly_id bigint, minx..maxy) plus the geometry,
+    either `xs`/`ys` ring arrays or a `wkb` (multi)polygon — from
+    sources.polygons.countries64_cover / countries64_mp_cover or any
+    polygon layer exploded to covering cells at the same `res`.
+    Returns the point columns + poly_id (or `keep_poly_cols`) for every
+    (point, polygon) pair whose point lies inside the polygon."""
+    geom_cols = ("wkb",) if "wkb" in cover.columns else ("xs", "ys")
+    keep = keep_point_cols or list(points.columns)
+    keep_poly = keep_poly_cols or ["poly_id"]
+    pts = assign_cell(points, lon, lat, res)
+    geoms = _collect_geometry(cover, geom_cols)
+    if geoms is None:
+        return _grouped_pip(pts, cover, lon=lon, lat=lat, keep=keep,
+                            keep_poly=keep_poly, geom_cols=geom_cols)
+    pip = _pip_dict_udf(cover.sparkSession.sparkContext.broadcast(geoms))
+    return (
+        pts.join(F.broadcast(cover.drop(*geom_cols)), "cell")
+        .filter(_envelope(lon, lat))
+        .filter(pip(F.col(lon), F.col(lat), F.col("poly_id")))
+        .select(*keep, *keep_poly)
+    )
 
 
 def spatial_join_wkb(
@@ -226,49 +237,16 @@ def spatial_join_wkb(
     *,
     res: int = 6,
     geom: str = "geom",
-    strategy: str = "broadcast",
     keep_point_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Point-in-polygon join where BOTH sides carry WKB geometry
-    (GeoParquet convention): points have a binary `geom` point column,
-    cover has (cell, poly_id, wkb multipolygon, minx..maxy).
-
-    Same 3-stage plan as spatial_join_points_in_polygons — decode point
-    WKB (batch-vectorized), cell equi-join, JVM envelope prefilter,
-    exact multi-ring crossing rule in one Arrow UDF. Supports polygons
-    with holes and multi-part polygons (the shapes real country layers
-    have, ogr/ogr_core.h:405-443 wkbMultiPolygon)."""
-    pts = decode_point_cols(points, geom)
-    pts = assign_cell(pts, "lon", "lat", res)
-    if strategy in ("shuffle", "grouped"):
-        # no-broadcast regime: WKB ships once per (cell, poly_id)
-        # cogroup, decoded once per group executor-side — the shared
-        # grouped plan with the multipolygon mask plugged in
-        keep = keep_point_cols or [c for c in points.columns if c != geom]
-        return _grouped_shuffle_pip(
-            pts, cover, lon="lon", lat="lat", keep=keep,
-            keep_poly=["poly_id"], geom_cols=("wkb",), mask_fn=_wkb_mask,
-        )
-    if strategy == "rowrings":
-        joined = pts.join(cover, "cell")
-        pip_pred = _pip_wkb_udf(
-            F.col("lon"), F.col("lat"), F.col("poly_id"), F.col("wkb")
-        )
-    else:
-        # broadcast-dict form: WKB decoded once on the driver, rings
-        # cross to each executor once; candidates carry only poly_id
-        polys_bc = _wkb_polys_broadcast(cover, "wkb")
-        joined = pts.join(F.broadcast(cover.drop("wkb")), "cell")
-        pip_pred = _pip_wkb_dict_udf(polys_bc)(
-            F.col("lon"), F.col("lat"), F.col("poly_id")
-        )
-    env = (
-        (F.col("lon") >= F.col("minx")) & (F.col("lon") <= F.col("maxx"))
-        & (F.col("lat") >= F.col("miny")) & (F.col("lat") <= F.col("maxy"))
-    )
-    exact = joined.filter(env).filter(pip_pred)
+    """Point-in-polygon join where the points carry WKB geometry
+    (GeoParquet convention: a binary `geom` point column): decode them
+    batch-vectorized, then join through spatial_join_points_in_polygons.
+    With a `wkb` multipolygon cover this supports holes and multi-part
+    polygons (ogr/ogr_core.h:405-443 wkbMultiPolygon)."""
     keep = keep_point_cols or [c for c in points.columns if c != geom]
-    return exact.select(*keep, "poly_id")
+    return spatial_join_points_in_polygons(
+        decode_point_cols(points, geom), cover, res=res, keep_point_cols=keep)
 
 
 def _convex_clip(sub_x, sub_y, clip_x, clip_y):
@@ -522,290 +500,3 @@ def boolean_areas_general(
             (F.col("aa") + F.col("ab") - 2 * F.col("area_i")).alias("area_sd"),
         )
     )
-
-
-def pip_hof_condition(lon: str, lat: str, xs: str, ys: str):
-    """The exact OGR crossing rule (ogrlinearring.cpp:462-531, the
-    same relative-endpoint form as kernels.pip.point_in_ring) as a
-    pure Spark higher-order-function fold — ZERO Python in the exact
-    stage. Works on open or closed rings (the wrap edge of a closed
-    ring is zero-length and never straddles). Division is guarded by
-    the straddle test (nested CASE; straddle implies y2 != y1), so it
-    is ANSI-safe.
-
-    Trade vs the Arrow broadcast-dict UDF: the fold is evaluated by
-    Spark's interpreted HOF path per candidate row (O(ring vertices)
-    each), while the UDF pays Arrow transfer + numpy vectorized
-    kernel. Small rings (<~100 vertices) favor this form; huge rings
-    favor the dict UDF. Single-ring rows only — multi-part/hole
-    layers stay on the Arrow path."""
-    n = f"size({xs})"
-    y2 = f"(element_at({ys}, i) - {lat})"
-    y1 = f"(element_at({ys}, 1 + i % {n}) - {lat})"
-    x2 = f"(element_at({xs}, i) - {lon})"
-    x1 = f"(element_at({xs}, 1 + i % {n}) - {lon})"
-    straddle = f"(({y1} > 0D AND {y2} <= 0D) OR ({y2} > 0D AND {y1} <= 0D))"
-    inter = f"(({x1} * {y2} - {x2} * {y1}) / ({y2} - {y1}))"
-    toggle = (f"CASE WHEN {straddle} THEN "
-              f"(CASE WHEN {inter} > 0D THEN true ELSE false END) "
-              f"ELSE false END")
-    return F.expr(
-        f"aggregate(sequence(1, {n}), false, "
-        f"(acc, i) -> CASE WHEN {toggle} THEN NOT acc ELSE acc END)"
-    )
-
-
-def _ring_mask(geom_pdf: "pd.DataFrame", xv: "np.ndarray",
-               yv: "np.ndarray") -> "np.ndarray":
-    """Exact mask for the rings-as-arrays geometry side (single ring
-    per polygon, the countries64 layer shape)."""
-    from ..kernels.pip import point_in_ring
-
-    ring = np.column_stack([
-        np.asarray(geom_pdf["xs"].iloc[0], dtype=np.float64),
-        np.asarray(geom_pdf["ys"].iloc[0], dtype=np.float64),
-    ])
-    return point_in_ring(xv, yv, ring)
-
-
-def _wkb_mask(geom_pdf: "pd.DataFrame", xv: "np.ndarray",
-              yv: "np.ndarray") -> "np.ndarray":
-    """Exact mask for the WKB geometry side: multipolygon with holes,
-    decoded ONCE per (cell, poly_id) group."""
-    from ..kernels import wkb as wkb_mod
-    from ..kernels.pip import point_in_polygon
-
-    polys = wkb_mod.decode_multipolygon(bytes(geom_pdf["wkb"].iloc[0]))
-    hit = np.zeros(len(xv), dtype=bool)
-    for rings in polys:
-        hit |= point_in_polygon(xv, yv, rings)
-    return hit
-
-
-def _grouped_shuffle_pip(
-    pts: DataFrame,
-    cover: DataFrame,
-    *,
-    lon: str,
-    lat: str,
-    keep: list[str],
-    keep_poly: list[str],
-    geom_cols: tuple[str, ...] = ("xs", "ys"),
-    mask_fn=_ring_mask,
-    n_salt: int = 0,
-    salt_threshold: int | None = None,
-) -> DataFrame:
-    """Exact PIP stage for the no-broadcast regime: ship each polygon's
-    geometry ONCE PER (cell, poly_id) GROUP instead of once per
-    candidate row.
-
-    Salt arm (n_salt > 1): a hot (cell, poly_id) key — one big polygon
-    capturing most candidates in a dense cell — would otherwise pin one
-    cogroup task. Candidates get `_salt = hash(lon, lat) % n_salt` and
-    the geometry row is REPLICATED once per salt on the cogroup's other
-    side, splitting the group across n_salt tasks at the cost of
-    n_salt-1 extra geometry copies per salted key. With
-    `salt_threshold` set, one cheap count-aggregation finds the keys
-    with more than `salt_threshold` candidates and only THOSE are
-    salted (geometry volume for cold keys unchanged); without it every
-    key salts — the forced-on mode the correctness gate uses.
-
-    Plan: cell equi-join against the geometry-free cover (cell,
-    poly_id, envelope) -> JVM envelope short-circuit -> cogroup
-    candidates with the geometry table on (cell, poly_id) -> one
-    vectorized ray-cast per group via `mask_fn`
-    (ogrlinearring.cpp:503-531 crossing rule, identical math to the
-    broadcast-dict arm; the WKB layer plugs in _wkb_mask).
-
-    Shuffle volume: candidates at 24 B + keep-cols each (the same
-    24 B/row the broadcast-dict arm ships through Arrow), plus ONE
-    geometry copy per (cell, poly_id) — vs 2*8*V bytes PER CANDIDATE
-    in the rings-in-row form. At 10^8 polygons (broadcast impossible)
-    this is the path that runs; group size is bounded by cell
-    granularity, so AQE-visible and salt-able like any equi-join."""
-    bad = set(keep_poly) & set(geom_cols)
-    if bad:
-        raise ValueError(
-            f"grouped 'shuffle' strategy cannot carry geometry columns "
-            f"{sorted(bad)} onto output rows — that is exactly the "
-            f"per-candidate geometry amplification this path removes; "
-            f"use strategy='rowrings' (ablation only) if you truly need it")
-    cov_cols = ["cell", "poly_id", "minx", "miny", "maxx", "maxy"] + [
-        c for c in keep_poly
-        if c not in ("cell", "poly_id", "minx", "miny", "maxx", "maxy")
-        and c not in geom_cols
-    ]
-    cov_lite = cover.select(*dict.fromkeys(cov_cols))
-    env = (
-        (F.col(lon) >= F.col("minx")) & (F.col(lon) <= F.col("maxx"))
-        & (F.col(lat) >= F.col("miny")) & (F.col(lat) <= F.col("maxy"))
-    )
-    carry = list(dict.fromkeys(
-        keep + [lon, lat] + [c for c in keep_poly if c != "poly_id"]
-    ))
-    cand = (
-        pts.join(cov_lite, "cell").filter(env)
-        .select(*carry, F.col("cell"), F.col("poly_id"))
-    )
-    # fresh names on the geometry side: cand's poly_id descends from
-    # the same cover plan, and cogroup rejects the ambiguous attribute
-    geoms = cover.select(
-        F.col("cell").alias("r_cell"), F.col("poly_id").alias("r_poly_id"),
-        *geom_cols,
-    )
-
-    cand_keys = ["cell", "poly_id"]
-    geom_keys = ["r_cell", "r_poly_id"]
-    if n_salt > 1:
-        if salt_threshold is not None:
-            # one count-agg over the (already envelope-filtered)
-            # candidates; the hot set is tiny by definition, so the
-            # driver-side collect is bounded and the isin compiles to a
-            # literal JVM set on both cogroup inputs
-            hot = [
-                int(r[0]) for r in (
-                    cand.groupBy("cell", "poly_id").count()
-                    .filter(F.col("count") > int(salt_threshold))
-                    .select(F.xxhash64("cell", "poly_id")).collect()
-                )
-            ]
-            cand_hot = (F.xxhash64("cell", "poly_id").isin(hot)
-                        if hot else F.lit(False))
-            geom_hot = (F.xxhash64("r_cell", "r_poly_id").isin(hot)
-                        if hot else F.lit(False))
-        else:
-            cand_hot = geom_hot = F.lit(True)
-        cand = cand.withColumn(
-            "_salt",
-            F.when(cand_hot,
-                   F.pmod(F.xxhash64(lon, lat), F.lit(n_salt)).cast("int"))
-            .otherwise(F.lit(0)),
-        )
-        geoms = geoms.withColumn(
-            "_salt",
-            F.explode(
-                F.when(geom_hot,
-                       F.sequence(F.lit(0), F.lit(int(n_salt) - 1)))
-                .otherwise(F.array(F.lit(0)))
-            ),
-        )
-        cand_keys = cand_keys + ["_salt"]
-        geom_keys = geom_keys + ["_salt"]
-
-    out_cols = list(dict.fromkeys(keep + keep_poly))
-    cand_schema = {f.name: f for f in cand.schema.fields}
-    missing = [c for c in out_cols if c not in cand_schema]
-    if missing:
-        raise KeyError(
-            f"grouped PIP output columns {missing} not present on the "
-            f"candidate side (available: {sorted(cand_schema)})")
-    out_schema = T.StructType([cand_schema[c] for c in out_cols])
-
-    def exact(key, cand_pdf: pd.DataFrame, geom_pdf: pd.DataFrame) -> pd.DataFrame:
-        if cand_pdf.empty or geom_pdf.empty:
-            return cand_pdf.iloc[0:0].reindex(columns=out_cols)
-        mask = mask_fn(
-            geom_pdf,
-            cand_pdf[lon].to_numpy(dtype=np.float64),
-            cand_pdf[lat].to_numpy(dtype=np.float64),
-        )
-        return cand_pdf.loc[mask, out_cols]
-
-    return (
-        cand.groupBy(*cand_keys)
-        .cogroup(geoms.groupBy(*geom_keys))
-        .applyInPandas(exact, out_schema)
-    )
-
-
-def spatial_join_points_in_polygons(
-    points: DataFrame,
-    cover: DataFrame,
-    *,
-    res: int = 6,
-    lon: str = "lon",
-    lat: str = "lat",
-    strategy: str = "broadcast",
-    n_salt: int = 8,
-    hot_cells: list[int] | None = None,
-    keep_point_cols: list[str] | None = None,
-    keep_poly_cols: list[str] | None = None,
-    salt_threshold: int | None = None,
-) -> DataFrame:
-    """points ⋈ polygons with PIP predicate.
-
-    cover: (cell bigint, poly_id bigint, xs, ys, minx..maxy) — from
-    sources.polygons.countries64_cover or any polygon layer exploded to
-    covering cells at the same `res`.
-    Returns the point columns + poly_id for every (point, polygon) pair
-    whose point lies inside the polygon.
-    """
-    pts = assign_cell(points, lon, lat, res)
-
-    if strategy in ("shuffle", "grouped", "grouped_salted"):
-        # no-broadcast regime: grouped-shuffle exact stage (ring ships
-        # once per (cell, poly_id) group — see _grouped_shuffle_pip).
-        # 'grouped_salted' splits hot (cell, poly_id) cogroups across
-        # n_salt tasks (all keys, or only those above salt_threshold).
-        keep = keep_point_cols or [c for c in points.columns]
-        keep_poly = keep_poly_cols or ["poly_id"]
-        return _grouped_shuffle_pip(
-            pts, cover, lon=lon, lat=lat, keep=keep, keep_poly=keep_poly,
-            n_salt=n_salt if strategy == "grouped_salted" else 0,
-            salt_threshold=salt_threshold,
-        )
-
-    if strategy == "jvm":
-        # zero-Python exact stage: the OGR crossing rule as a
-        # higher-order-function fold over the ring arrays carried by
-        # the broadcast join — see pip_hof_condition for when this
-        # beats the Arrow path
-        cov = cover
-        pip_pred = pip_hof_condition(lon, lat, "xs", "ys")
-    elif strategy == "rowrings":
-        # ablation control ONLY (tools/bench_isolated.py): rings-in-row
-        # exact stage — 2*8*V bytes per candidate through Arrow. This
-        # is the measured cliff the grouped strategy replaces.
-        cov = cover
-        pip_pred = _pip_udf(
-            F.col(lon), F.col(lat), F.col("poly_id"), F.col("xs"), F.col("ys")
-        )
-    else:
-        # broadcast-dict form: candidates carry only poly_id into the
-        # Arrow exact stage; rings cross to each executor once
-        rings_bc = _rings_broadcast(cover)
-        cov = cover.drop("xs", "ys")
-        pip_pred = _pip_dict_udf(rings_bc)(
-            F.col(lon), F.col(lat), F.col("poly_id")
-        )
-
-    if strategy == "salted":
-        hot = hot_cells or []
-        pts = pts.withColumn(
-            "salt",
-            F.when(F.col("cell").isin(hot),
-                   F.pmod(F.xxhash64(lon, lat), F.lit(n_salt)))
-            .otherwise(F.lit(0)),
-        )
-        salted_cov = cov.withColumn(
-            "salt",
-            F.explode(
-                F.when(F.col("cell").isin(hot), F.sequence(F.lit(0), F.lit(n_salt - 1)))
-                .otherwise(F.array(F.lit(0)))
-            ),
-        )
-        joined = pts.join(F.broadcast(salted_cov), ["cell", "salt"])
-    elif strategy == "rowrings":
-        joined = pts.join(cov, "cell")
-    else:
-        joined = pts.join(F.broadcast(cov), "cell")
-
-    # envelope stage — JVM-side short circuit before any Python runs
-    env = (
-        (F.col(lon) >= F.col("minx")) & (F.col(lon) <= F.col("maxx"))
-        & (F.col(lat) >= F.col("miny")) & (F.col(lat) <= F.col("maxy"))
-    )
-    exact = joined.filter(env).filter(pip_pred)
-    keep = keep_point_cols or [c for c in points.columns]
-    keep_poly = keep_poly_cols or ["poly_id"]
-    return exact.select(*keep, *keep_poly)

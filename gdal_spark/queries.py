@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from .functions import tiles as TF
 from .operators import dedup, knn, multimodal, raster, relational, similarity, text, tiling
 from .operators.spatial_join import spatial_join_points_in_polygons
+from .session import conf_override
 from .sources import derive, docs, polygons
 
 M31 = derive.M31
@@ -393,7 +394,7 @@ def q_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _points(spark, sf_dir)
     cov = polygons.countries64_cover(spark, res=6)
     return spatial_join_points_in_polygons(
-        pts, cov, res=6, strategy="broadcast", keep_point_cols=["id"]
+        pts, cov, res=6, keep_point_cols=["id"]
     )
 
 
@@ -431,19 +432,12 @@ def sql_spatial_join_wkb() -> str:
 
 
 def q_spatial_join_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same join with the hot-polygon fixture + salted shuffle strategy
-    (north_rule skew handling)."""
-    from .kernels import cells
-
+    """Same join with the hot-polygon fixture (polygon 0 inflated to
+    ~30% of the world, FIXTURES F3) through the default entry."""
     pts = _points(spark, sf_dir)
     cov = polygons.countries64_cover(spark, res=6, skew_poly0=True)
-    pdf = polygons.countries64_pdf(skew_poly0=True)
-    ring = np.column_stack([np.asarray(pdf.iloc[0]["xs"]), np.asarray(pdf.iloc[0]["ys"])])
-    hot = [int(c) for c in cells.polygon_cover(ring, 6)]
     return spatial_join_points_in_polygons(
-        pts, cov, res=6, strategy="salted", hot_cells=hot, n_salt=8,
-        keep_point_cols=["id"],
-    )
+        pts, cov, res=6, keep_point_cols=["id"])
 
 
 def sql_spatial_join_skew() -> str:
@@ -454,29 +448,25 @@ BIGRING_NV = 4096
 
 
 def q_spatial_join_bigring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship scale fixture, correctness-gated (VERDICT r3 item
-    2): the 4096-vertex dense cover (real-country ring sizes) joined
-    through BOTH exact-stage engines — the broadcast-dict Arrow PIP
-    (rings cross once per executor, 8 B/candidate) and the grouped
-    cogroup PIP (no-broadcast regime: rings ship once per
-    (cell, poly_id) group) — plus (r5) the SALTED grouped form with
-    salting forced on for every key (n_salt=4), which replicates each
-    4096-vertex ring per salt and splits each cogroup four ways. One
+    """The flagship scale fixture, correctness-gated: the 4096-vertex
+    dense cover (real-country ring sizes) joined through BOTH arms of
+    the spatial join — broadcast (the default: rings cross once per
+    executor, 8 B/candidate) and grouped (forced with the broadcast
+    threshold at -1: rings ship once per (cell, poly_id) group). One
     oracle replays the crossing rule (ogrlinearring.cpp:503-531) over
-    all 4096 edges; all three engine tags must produce the identical
-    row set."""
+    all 4096 edges; every tag must produce the identical row set.
+
+    The 'salted' tag duplicates 'grouped': no salted arm exists any
+    more, and the grouped rows are emitted under both tags (from one
+    join) only to keep the gated row set unchanged."""
     pts = _points(spark, sf_dir)
     cov = polygons.countries64_dense_cover(spark, res=6, nv=BIGRING_NV)
-    out = []
-    for tag, st in (("dict", "broadcast"), ("grouped", "shuffle"),
-                    ("salted", "grouped_salted")):
-        out.append(
-            spatial_join_points_in_polygons(
-                pts, cov, res=6, strategy=st, n_salt=4,
-                keep_point_cols=["id"],
-            ).select("id", "poly_id", F.lit(tag).alias("engine"))
-        )
-    return out[0].unionByName(out[1]).unionByName(out[2])
+    dict_arm = spatial_join_points_in_polygons(pts, cov, res=6, keep_point_cols=["id"])
+    with conf_override(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
+        grouped = spatial_join_points_in_polygons(pts, cov, res=6, keep_point_cols=["id"])
+    return dict_arm.select("id", "poly_id", F.lit("dict").alias("engine")).unionByName(
+        grouped.select("id", "poly_id", F.explode(
+            F.array(F.lit("grouped"), F.lit("salted"))).alias("engine")))
 
 
 def sql_spatial_join_bigring() -> str:
@@ -500,7 +490,7 @@ def q_spatial_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _points(spark, sf_dir)
     cov = polygons.countries64_cover(spark, res=6).filter(F.col("poly_id") == 27)
     out = spatial_join_points_in_polygons(
-        pts, cov, res=6, strategy="broadcast", keep_point_cols=["id"]
+        pts, cov, res=6, keep_point_cols=["id"]
     )
     return out.select("id")
 
@@ -516,7 +506,7 @@ def q_spatial_erase(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _points(spark, sf_dir)
     cov = polygons.countries64_cover(spark, res=6)
     hits = spatial_join_points_in_polygons(
-        pts, cov, res=6, strategy="broadcast", keep_point_cols=["id"]
+        pts, cov, res=6, keep_point_cols=["id"]
     ).select("id")
     return pts.select("id").join(hits, "id", "left_anti")
 
@@ -537,7 +527,7 @@ def q_spatial_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _points(spark, sf_dir)
     cov = polygons.countries64_cover(spark, res=6)
     hits = spatial_join_points_in_polygons(
-        pts, cov, res=6, strategy="broadcast", keep_point_cols=["id"]
+        pts, cov, res=6, keep_point_cols=["id"]
     )
     return pts.select("id").join(hits, "id", "left").select("id", "poly_id")
 
@@ -1049,7 +1039,7 @@ def q_span_invariant(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cov = polygons.countries64_cover(spark, res=6)
     joined = spatial_join_points_in_polygons(
-        d, cov, res=6, strategy="broadcast",
+        d, cov, res=6,
         keep_point_cols=["id", "spans"],
     )
     fp = F.md5(
@@ -6205,7 +6195,7 @@ def flagship(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> Dat
     pts = _points(spark, sf_dir)
     cov = polygons.countries64_cover(spark, res=6)
     joined = spatial_join_points_in_polygons(
-        pts, cov, res=6, strategy="broadcast", keep_point_cols=["id", "lon", "lat"]
+        pts, cov, res=6, keep_point_cols=["id", "lon", "lat"]
     )
     t = tiling.assign_tiles(joined, zoom=8)
     return t.select("id", "poly_id", "tx", "ty_xyz", "quadkey")

@@ -27,7 +27,8 @@ POLY_SCHEMA = (
 def countries64_pdf(skew_poly0: bool = False) -> pd.DataFrame:
     """Driver-side pandas build of the 64-polygon layer (64 rows — the
     canonical broadcast-side dimension). skew_poly0 inflates polygon 0
-    to ~30% of the world to exercise hot-cell salting (FIXTURES F3)."""
+    to ~30% of the world, one polygon with a dominant candidate share
+    (FIXTURES F3)."""
     rows = []
     for p in range(derive.NPOLY):
         ring = derive.polygon_ring_np(p)

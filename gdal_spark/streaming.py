@@ -125,7 +125,7 @@ def stream_spatial_join(stream_df: DataFrame, cover: DataFrame, *,
                         res: int = 6,
                         keep_point_cols: list[str] | None = None) -> DataFrame:
     """Stream-static spatial join: the batch cell-bucketed PIP join
-    (operators.spatial_join, broadcast strategy) composed unchanged
+    (operators.spatial_join, broadcast arm) composed unchanged
     onto a streaming DataFrame. Every stage is stateless — cell
     assignment is codegen column math, the polygon cover is a static
     broadcast (rings cross to each executor once via the broadcast
@@ -134,13 +134,13 @@ def stream_spatial_join(stream_df: DataFrame, cover: DataFrame, *,
     sink semantics from the checkpoint. The one structural difference
     vs batch: the static side is collected ONCE at query start and
     pinned for the stream's lifetime (reference a fresh cover to pick
-    up polygon updates)."""
+    up polygon updates). A cover too big to broadcast takes the grouped
+    arm instead: a stream-static cogroup that re-reads the cover in
+    every micro-batch."""
     from .operators.spatial_join import spatial_join_points_in_polygons
 
     return spatial_join_points_in_polygons(
-        stream_df, cover, res=res, strategy="broadcast",
-        keep_point_cols=keep_point_cols,
-    )
+        stream_df, cover, res=res, keep_point_cols=keep_point_cols)
 
 
 def stream_tile_pngs(stream_px: DataFrame, out_dir: str, *,

@@ -250,3 +250,41 @@ def test_streaming_spatial_join_matches_batch(spark):
         assert {(i, p) for i, p in batch if i in seen_ids} == got
     finally:
         q.stop()
+
+
+def test_streaming_spatial_join_grouped_arm_matches_batch(spark):
+    """With the broadcast threshold at -1 a stream takes the grouped
+    arm (a stream-static cogroup); its pairs are still batch pairs."""
+    from gdal_spark import streaming
+    from gdal_spark.operators.spatial_join import spatial_join_points_in_polygons
+    from gdal_spark.session import conf_override
+    from gdal_spark.sources import docs as D
+    from gdal_spark.sources import polygons
+
+    cover = polygons.countries64_cover(spark, res=5)
+    with conf_override(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
+        joined = streaming.stream_spatial_join(
+            streaming.docs_rate_stream(spark, rows_per_second=500), cover,
+            res=5, keep_point_cols=["doc_index"])
+        q = streaming.run_to_memory(
+            joined.select("doc_index", "poly_id"), name="sj_stream_grouped")
+        try:
+            deadline = time.time() + 45
+            n = 0
+            while time.time() < deadline and n < 20 and q.exception() is None:
+                time.sleep(1)
+                n = spark.sql(
+                    "SELECT count(*) c FROM sj_stream_grouped").collect()[0]["c"]
+            assert q.exception() is None
+            assert n >= 20
+            plan = q._jsq.streamingQuery().lastExecution().executedPlan()
+            assert "FlatMapCoGroupsInPandas" in plan.toString()
+            got = {(r["doc_index"], r["poly_id"]) for r in spark.sql(
+                "SELECT doc_index, poly_id FROM sj_stream_grouped WHERE doc_index < 300"
+            ).collect()}
+        finally:
+            q.stop()
+    batch = {(r["doc_index"], r["poly_id"]) for r in spatial_join_points_in_polygons(
+        D.synth_docs(spark, 300), cover, res=5, keep_point_cols=["doc_index"],
+    ).collect()}
+    assert got <= batch

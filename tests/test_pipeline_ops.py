@@ -39,6 +39,12 @@ def test_jaccard_pairs(spark, docs_df):
     assert row14["shared"] == row14["na"] == row14["nb"]
 
 
+def test_jaccard_pairs_schema(spark, docs_df):
+    out = dedup.ngram_jaccard_pairs(docs_df, n=2, threshold_pct=50)
+    assert out.dtypes == [("id_a", "bigint"), ("id_b", "bigint"),
+                          ("shared", "bigint"), ("na", "bigint"), ("nb", "bigint")]
+
+
 def test_minhash_identical_docs_share_all_bands(spark, docs_df):
     out = dedup.minhash_lsh_pairs(docs_df, n_hashes=16, bands=4).toPandas()
     row = out[(out.id_a == 1) & (out.id_b == 4)]

@@ -2,26 +2,21 @@
 
 The driver-contract registry (`__spark_entry__.queries()`) is capped at
 50 oracle-gated slots, so bench-only workloads — the headline
-north-star pipeline and the skew/ablation arms — live here instead.
+north-star pipeline and the forced grouped-arm runs — live here instead.
 Each entry has the same (spark, sf_dir) -> DataFrame signature as a
 registry query, so the isolated harness treats both uniformly.
 
 Entries:
   headline_join_tile         the north-star workload (spatial join +
                              tile assignment over the synthesized
-                             interleaved-doc table), pure-JVM HOF
-                             exact stage — same plan bench.py times
-  headline_join_tile_arrow   broadcast-dict Arrow exact-stage twin
-  spatial_join_bigpoly_skew_grouped  4096-vertex cover with polygon 0
-                             inflated to hold the dominant candidate
-                             share, UNSALTED grouped cogroup (the hot
-                             cogroup pins one task — the control)
-  spatial_join_bigpoly_skew_salted   same input through the salted
-                             grouped path (hot keys auto-detected via
-                             salt_threshold, geometry replicated per
-                             salt) — VERDICT r4 item 4's criterion is
-                             this arm within 2x of the UNSKEWED
-                             spatial_join_bigpoly_grouped run
+                             interleaved-doc table) — same plan
+                             bench.py times
+  spatial_join_bigpoly_grouped       4096-vertex cover through the
+                             grouped cogroup arm (broadcast threshold
+                             forced to -1)
+  spatial_join_bigpoly_skew_grouped  same, with polygon 0 inflated to
+                             hold the dominant candidate share (the
+                             hot cogroups are left to AQE)
 """
 from __future__ import annotations
 
@@ -40,45 +35,43 @@ def _doc_path(spark, n_docs: int) -> str:
     return p
 
 
-def _headline(strategy: str):
-    def run(spark, sf_dir):
-        from gdal_spark.operators import tiling
-        from gdal_spark.operators.spatial_join import (
-            spatial_join_points_in_polygons,
-        )
-        from gdal_spark.sources import polygons
+def _headline(spark, sf_dir):
+    from gdal_spark.operators import tiling
+    from gdal_spark.operators.spatial_join import (
+        spatial_join_points_in_polygons,
+    )
+    from gdal_spark.sources import polygons
 
-        n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "2000000"))
-        d = spark.read.parquet(_doc_path(spark, n_docs))
-        cov = polygons.countries64_cover(spark, res=6)
-        joined = spatial_join_points_in_polygons(
-            d, cov, res=6, strategy=strategy,
-            keep_point_cols=["doc_id", "doc_index", "spans", "lon", "lat"],
-        )
-        tiled = tiling.assign_tiles(joined, zoom=12)
-        return tiled.select(
-            "doc_id", "spans", "poly_id", "tx", "ty_xyz", "quadkey")
-    return run
+    n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "2000000"))
+    d = spark.read.parquet(_doc_path(spark, n_docs))
+    cov = polygons.countries64_cover(spark, res=6)
+    joined = spatial_join_points_in_polygons(
+        d, cov, res=6,
+        keep_point_cols=["doc_id", "doc_index", "spans", "lon", "lat"],
+    )
+    tiled = tiling.assign_tiles(joined, zoom=12)
+    return tiled.select(
+        "doc_id", "spans", "poly_id", "tx", "ty_xyz", "quadkey")
 
 
-def _bigpoly(strategy: str, skew: bool, **kw):
+def _bigpoly_grouped(skew: bool):
     def run(spark, sf_dir):
         from gdal_spark.operators.spatial_join import (
             spatial_join_points_in_polygons,
         )
+        from gdal_spark.session import conf_override
         from gdal_spark.sources import polygons
 
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
         dense = polygons.countries64_dense_cover(
             spark, res=6, nv=4096, skew_poly0=skew)
         pts = (
             spark.read.parquet(_doc_path(spark, 2000000))
-            .limit(100_000).repartition(cpus)
+            .limit(100_000)
+            .repartition(spark.sparkContext.defaultParallelism)
         )
-        return spatial_join_points_in_polygons(
-            pts, dense, res=6, strategy=strategy,
-            keep_point_cols=["doc_id"], **kw,
-        )
+        with conf_override(spark, "spark.sql.autoBroadcastJoinThreshold", "-1"):
+            return spatial_join_points_in_polygons(
+                pts, dense, res=6, keep_point_cols=["doc_id"])
     return run
 
 
@@ -111,12 +104,9 @@ def _rpc_dem(variant: str):
 
 
 EXTRA = {
-    "headline_join_tile": _headline("jvm"),
-    "headline_join_tile_arrow": _headline("broadcast"),
-    "spatial_join_bigpoly_grouped": _bigpoly("shuffle", skew=False),
-    "spatial_join_bigpoly_skew_grouped": _bigpoly("shuffle", skew=True),
-    "spatial_join_bigpoly_skew_salted": _bigpoly(
-        "grouped_salted", skew=True, n_salt=8, salt_threshold=2000),
+    "headline_join_tile": _headline,
+    "spatial_join_bigpoly_grouped": _bigpoly_grouped(skew=False),
+    "spatial_join_bigpoly_skew_grouped": _bigpoly_grouped(skew=True),
     "rpc_dem_inverse_broadcast": _rpc_dem("broadcast"),
     "rpc_dem_inverse_gather": _rpc_dem("gather"),
 }

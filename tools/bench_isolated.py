@@ -8,7 +8,7 @@ warmup + best-of-2, and writes BENCH/bench_isolated.json (round-neutral; r3's re
 
 Usage: python tools/bench_isolated.py [query ...]
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32).
+     SPARK_GRAFT_CPUS (default: the host's cores).
 """
 from __future__ import annotations
 
@@ -17,13 +17,12 @@ import os
 import subprocess
 import sys
 
-DEFAULT = ["headline_join_tile", "headline_join_tile_arrow",
+DEFAULT = ["headline_join_tile",
            "tile_assign_suite", "pyramid_counts", "spatial_join",
            "spatial_join_wkb", "spatial_join_bigring", "rasterize_suite",
            "overview_suite", "similarity_topk", "knn", "minhash_lsh",
            "spatial_join_bigpoly_grouped",
            "spatial_join_bigpoly_skew_grouped",
-           "spatial_join_bigpoly_skew_salted",
            "rpc_dem_inverse_broadcast", "rpc_dem_inverse_gather"]
 
 WORKER = r"""
@@ -67,7 +66,10 @@ print(json.dumps({{"query": name, "sec": round(best, 3)}}))
 def main() -> None:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    sys.path.insert(0, repo)
+    from gdal_spark.session import host_cpus
+
+    cpus = str(host_cpus())
     names = sys.argv[1:] or DEFAULT
     path0 = os.path.join(repo, "BENCH", "bench_isolated.json")
     out: dict[str, float] = {}

@@ -59,7 +59,7 @@ def main(argv: list[str]) -> None:
 
     def work(part):
         joined = spatial_join_points_in_polygons(
-            part, cov, res=args.res, strategy="broadcast",
+            part, cov, res=args.res,
             keep_point_cols=["doc_id", "doc_index", "spans", "lon", "lat",
                              "part_key"],
         )
